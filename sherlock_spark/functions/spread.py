@@ -9,13 +9,13 @@ split unit. Any heavy row-local work chained onto such a scan
 decode) then runs on ONE core: measured 20 s for the sf1 MinHash
 signature build on local[32], ~0.6 s after spreading.
 
-``spread`` repartitions ONLY when the input's partition count is below
-the cluster's default parallelism, so it is inert at scale (a 100-TB
-table scans as thousands of splits and passes through untouched) and
-costs one small shuffle (~the table's bytes) exactly when the
-alternative is serializing the whole stage on one core. This is the
-same principle as ``_transcripts``' explicit repartition in queries.py:
-partition by COMPUTE, not by bytes.
+``spread`` repartitions ONLY when the optimizer's size estimate of the
+input is below ``defaultParallelism x 16 MB``, so it is inert at scale
+(a 100-TB table, or any input of unknown size, passes through
+untouched) and costs one small shuffle (~the table's bytes) exactly
+when the alternative is serializing the whole stage on one core. This
+is the same principle as ``_transcripts``' explicit repartition in
+queries.py: partition by COMPUTE, not by bytes.
 """
 
 from __future__ import annotations

@@ -366,11 +366,11 @@ def _kg_stages(
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """The three expensive KG stages (NER annotation, link->CC
     canonical map, triple extraction), each materialized ONCE per
-    (session, sf_dir) through the in-process stage registry
-    (``udfcache.stage``) — the resume pattern of ``plans/checkpoint.py``
-    applied to repeated query invocations: every later construction
-    (and the nodes-vs-edges branches) reads stage output instead of
-    re-running the model UDFs and the CC loop.
+    (session, sf_dir) through ``udfcache.stage``: every later
+    construction (and the nodes-vs-edges branches) reads stage output
+    instead of re-running the model UDFs and the CC loop. A second
+    wiring of ``run_kg_pipeline``'s DAG: it dedups model inputs and
+    sets no ``max_length``.
     """
     # NER output feeds both linking and extraction — pruned to the
     # columns those stages read (drop text/tokens/bio)

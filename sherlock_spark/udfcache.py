@@ -15,29 +15,26 @@ plan-stable and re-execution-free within a session:
     configuration, not per construction).
 
 ``stage``
-    The in-process analogue of ``plans/checkpoint.py`` stage tables:
-    a DataFrame built once, materialized with ``localCheckpoint`` and
-    reused by every later construction that asks for the same
-    (session, key). This is the production resume pattern — repeated
-    queries over the extract->link->canonicalize DAG read materialized
-    stage output instead of re-running the model UDFs. Cross-process
-    durability (a killed job) is ``CheckpointManager``'s job; this
-    registry covers repeated invocations inside one driver process.
+    A DataFrame built once per (session, key) and reused by every later
+    construction that asks for the same key: repeated queries over the
+    extract->link->canonicalize DAG read materialized stage output
+    instead of re-running the model UDFs. By default the stage is
+    materialized with ``localCheckpoint`` and lives as long as the
+    session.
 
 Keys include ``applicationId`` so a stopped/restarted session never
 serves broadcasts or checkpointed RDDs from a dead context.
 
-Cross-process warm resume (round-4 VERDICT #6): when
-``SHERLOCK_STAGE_DIR`` is set, ``stage`` additionally persists each
-stage table as content-keyed parquet under that directory and a fresh
-JVM resumes from it instead of re-materializing — the 11-15 s cold
-start of ``kg_canonical_edges`` drops to roughly its warm cost on the
-second process. The on-disk key is ``config_hash(key, code_digest)``
-where ``code_digest`` is a stat-based digest of every ``.py`` file in
-the package: ANY source edit changes the digest, so a persisted stage
-table can never outlive the code that built it (stale entries become
-unreachable and are TTL-swept). Unset (the default, and the posture of
-the correctness gate), behavior is exactly the session-local
+Cross-process warm resume: when ``SHERLOCK_STAGE_DIR`` is set, ``stage``
+materializes through ``CheckpointManager`` (``plans/checkpoint.py``)
+instead, as stage ``config_hash(key)`` under
+``<SHERLOCK_STAGE_DIR>/<code_digest>``, and a fresh JVM resumes from
+that table instead of re-materializing it. ``code_digest`` is a
+stat-based digest of every ``.py`` file in the package: ANY source edit
+changes it, so a persisted stage table can never outlive the code that
+built it (stale entries become unreachable and are swept after
+``STAGE_TTL_DAYS``). Unset (the default, and the posture of the
+correctness gate), behavior is exactly the session-local
 ``localCheckpoint`` path.
 """
 
@@ -49,10 +46,14 @@ import shutil
 import time
 from typing import Callable
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 _UDF_INSTANCES: dict[tuple, object] = {}
 _STAGE_CACHE: dict[tuple, DataFrame] = {}
+
+# durable stage entries untouched this long are swept
+STAGE_TTL_DAYS = 7
 
 
 def config_hash(*parts) -> str:
@@ -102,8 +103,9 @@ def stage(
 ) -> DataFrame:
     """Materialize ``build()`` once per (session, key) and reuse it.
 
-    The checkpoint cuts lineage, so downstream plans over the stage are
-    small and later invocations never re-run the stage's UDFs.
+    The materialization cuts lineage, so downstream plans over the
+    stage are small and later invocations never re-run the stage's
+    UDFs.
     """
     app_id = spark.sparkContext.applicationId
     _evict_dead_sessions(_STAGE_CACHE, app_id)
@@ -149,13 +151,12 @@ def _code_digest() -> str:
 
 def _sweep_stale(stage_dir: str) -> None:
     """Once per process per dir: drop entries untouched for
-    ``SHERLOCK_STAGE_TTL_DAYS`` (default 7) — entries orphaned by code
-    edits are unreachable by key, this bounds the disk they hold."""
+    ``STAGE_TTL_DAYS`` — entries orphaned by code edits are unreachable
+    by key, this bounds the disk they hold."""
     if stage_dir in _SWEPT_DIRS:
         return
     _SWEPT_DIRS.add(stage_dir)
-    ttl = float(os.environ.get("SHERLOCK_STAGE_TTL_DAYS", "7")) * 86400
-    cutoff = time.time() - ttl
+    cutoff = time.time() - STAGE_TTL_DAYS * 86400
     try:
         entries = os.listdir(stage_dir)
     except FileNotFoundError:
@@ -172,32 +173,22 @@ def _sweep_stale(stage_dir: str) -> None:
 def _stage_persistent(
     spark: SparkSession, stage_dir: str, key: tuple, build: Callable[[], DataFrame]
 ) -> DataFrame:
-    """Disk-backed stage materialization: parquet at
-    ``<stage_dir>/<config_hash(key, code_digest)>``. The parquet read
-    IS the lineage cut (no localCheckpoint needed), and unlike
-    checkpointed RDDs it survives the JVM. Writes go to a tmp dir and
-    ``os.rename`` into place so concurrent processes race atomically —
-    the loser reads the winner's table. Falls back to the session-local
-    path for the rare stage whose schema parquet can't hold."""
+    """Disk-backed stage materialization: ``CheckpointManager`` stage
+    ``config_hash(key)`` under ``<stage_dir>/<code_digest>``. The table
+    read IS the lineage cut (no localCheckpoint needed), and unlike
+    checkpointed RDDs it survives the JVM. Falls back to the
+    session-local path for the rare stage whose schema parquet can't
+    hold."""
+    # imported here: the plans package imports the operators, which
+    # import this module
+    from sherlock_spark.plans.checkpoint import CheckpointManager
+
     _sweep_stale(stage_dir)
-    path = os.path.join(stage_dir, config_hash(key, _code_digest()))
-    success = os.path.join(path, "_SUCCESS")
-    if not os.path.exists(success):
-        if os.path.exists(path):
-            # a crashed writer left a partial table; rebuild it
-            shutil.rmtree(path, ignore_errors=True)
-        tmp = f"{path}.tmp-{spark.sparkContext.applicationId}"
-        try:
-            build().write.mode("overwrite").parquet(tmp)
-        except Exception:
-            shutil.rmtree(tmp, ignore_errors=True)
-            return build().localCheckpoint(eager=True)
-        try:
-            os.rename(tmp, path)
-        except OSError:
-            # lost the race to a concurrent writer; use its table
-            shutil.rmtree(tmp, ignore_errors=True)
-    return spark.read.parquet(path)
+    manager = CheckpointManager(spark, os.path.join(stage_dir, _code_digest()))
+    try:
+        return manager.run_stage(config_hash(key), build)
+    except AnalysisException:
+        return build().localCheckpoint(eager=True)
 
 
 def clear_session_caches() -> None:

@@ -13,6 +13,7 @@ suppress a re-delivery whose event time lands inside the ttl horizon
 and re-emit one beyond it (state evicted by the watermark).
 """
 
+import json
 import os
 
 from pyspark.sql import functions as F
@@ -95,20 +96,28 @@ def test_pipeline_metrics_stage_carries_pair_overflow(spark, tmp_path):
 def test_stage_persists_across_sessions(spark, tmp_path, monkeypatch):
     """SHERLOCK_STAGE_DIR: a second 'process' (simulated by clearing the
     in-memory registry) must serve the staged table from parquet without
-    re-running build; a code-digest change must force a rebuild."""
+    re-running build; a code-digest change must force a rebuild. The
+    table is a CheckpointManager stage under the code digest, with a
+    lineage record; a schema parquet cannot hold stays session-local."""
     from sherlock_spark import udfcache
-    from sherlock_spark.udfcache import _STAGE_CACHE, stage
+    from sherlock_spark.udfcache import _STAGE_CACHE, config_hash, stage
 
-    monkeypatch.setenv("SHERLOCK_STAGE_DIR", str(tmp_path / "stagecache"))
+    stage_dir = tmp_path / "stagecache"
+    monkeypatch.setenv("SHERLOCK_STAGE_DIR", str(stage_dir))
     builds = []
 
     def build():
         builds.append(1)
         return spark.range(5).select(F.col("id").alias("n"))
 
+    def lineage_path(digest):
+        return stage_dir / digest / "_lineage" / f"{config_hash(key)}.json"
+
     key = ("round5-test-stage", "x")
     first = stage(spark, key, build)
     assert first.count() == 5 and len(builds) == 1
+    record = json.loads(lineage_path(udfcache._code_digest()).read_text())
+    assert record["n_rows"] == 5
     # same process, in-memory hit: no rebuild, no re-read
     stage(spark, key, build)
     assert len(builds) == 1
@@ -123,6 +132,14 @@ def test_stage_persists_across_sessions(spark, tmp_path, monkeypatch):
     rebuilt = stage(spark, key, build)
     assert rebuilt.count() == 5
     assert len(builds) == 2  # rebuilt under the new digest
+    assert lineage_path("different-code").exists()
+    # parquet cannot write an empty struct: localCheckpoint fallback
+    empty_key = ("round5-empty-struct",)
+    empty = stage(
+        spark, empty_key, lambda: spark.range(3).select("id", F.struct().alias("x"))
+    )
+    assert empty.count() == 3
+    assert not (stage_dir / "different-code" / config_hash(empty_key)).exists()
 
 
 def _write_docs(spark, rows, input_dir, mode):

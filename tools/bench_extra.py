@@ -20,29 +20,10 @@ import argparse
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-HEADLINE = [
-    "kg_triples",
-    "kg_canonical_edges",
-    "rel_pricing_summary",
-    "rel_region_revenue",
-    "rel_events_sessionize",
-    "sim_topk_cosine",
-    "sim_lsh_topk",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-]
-
-
-def steal_ticks() -> int:
-    try:
-        with open("/proc/stat") as f:
-            return int(f.readline().split()[8])
-    except (OSError, IndexError, ValueError):
-        return 0
+from measure import HEADLINE, min_of
 
 
 def main() -> None:
@@ -76,27 +57,17 @@ def main() -> None:
     for name in names:
         df_builder = QUERIES[name]
         spark.sparkContext.setJobDescription(f"bench_extra: {name}")
-        times = []
-        steals = []
-        for _ in range(args.reps + 1):  # first rep is the cold/warmup one
-            s0 = steal_ticks()
-            t0 = time.time()
-            (
-                df_builder(spark, sf_dir)
-                .write.format("noop")
-                .mode("overwrite")
-                .save()
-            )
-            dt = time.time() - t0
-            times.append(round(dt, 3))
-            steals.append(
-                round((steal_ticks() - s0) / dt, 1) if dt > 0 else 0.0
-            )
+
+        def run():
+            df_builder(spark, sf_dir).write.format("noop").mode("overwrite").save()
+
+        cold, _ = min_of(run, 1)  # the cold/warmup rep
+        best, reps = min_of(run, args.reps)
         out[name] = {
-            "noop_min": min(times[1:]),
-            "noop_cold": times[0],
-            "reps": times[1:],
-            "steal_pct_1core": steals[1:],
+            "noop_min": round(best.seconds, 3),
+            "noop_cold": round(cold.seconds, 3),
+            "reps": [round(rep.seconds, 3) for rep in reps],
+            "steal_pct_1core": [round(rep.steal_pct, 1) for rep in reps],
         }
         if args.explain:
             os.makedirs(args.explain, exist_ok=True)

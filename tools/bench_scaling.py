@@ -38,7 +38,8 @@ BEFORE the measured run (external + any still-decaying own load).
 
 Usage: python tools/bench_scaling.py [--sf-dir DIR] [--reps N]
        [--rounds N] [--replicate N] [--modes cluster,cluster8,local]
-Writes BENCH.md and prints the JSON result.
+Prints one JSON line per mode, then the report in BENCH.md's markdown
+layout (redirect it to update BENCH.md).
 """
 
 from __future__ import annotations
@@ -51,9 +52,13 @@ import subprocess
 import sys
 import time
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 WORKER = r"""
-import json, sys, time, os
-sys.path.insert(0, "/root/repo")
+import json, sys, os
+# run with the repo root as the working directory
+sys.path[:0] = [os.getcwd(), os.path.join(os.getcwd(), "tools")]
+from measure import min_of
 from pyspark.sql import functions as F
 from sherlock_spark.session import get_spark
 from sherlock_spark.sources.transcripts import transcripts_from_documents
@@ -66,7 +71,7 @@ import shutil, tempfile
 master = sys.argv[1]
 cores = int(sys.argv[2])
 sf_dir = sys.argv[3]
-reps = int(sys.argv[4])
+n_reps = int(sys.argv[4])
 replicate = int(sys.argv[5])
 executor_mem = sys.argv[6]
 
@@ -117,46 +122,25 @@ def run():
 # in the parent
 run().count()
 run().count()
-def steal_ticks():
-    # hypervisor CPU steal (col 8 of /proc/stat): the co-tenant-VM
-    # signal this guest's loadavg cannot see
-    try:
-        with open("/proc/stat") as f:
-            return int(f.readline().split()[8])
-    except (OSError, IndexError, ValueError):
-        return 0
-
-best = None
-best_pre_load = None
-best_steal = None
-count = 0
 pre_loads = []
-steals = []
-for _ in range(reps):
-    pre = os.getloadavg()[0]
-    pre_loads.append(round(pre, 1))
-    s0 = steal_ticks()
-    t0 = time.time()
-    count = run().count()
-    dt = time.time() - t0
-    stl = round((steal_ticks() - s0) / dt, 1) if dt > 0 else 0.0
-    steals.append(stl)
-    if best is None or dt < best:
-        best = dt
-        best_pre_load = round(pre, 1)
-        best_steal = stl
+counts = []
+
+def rep():
+    # the 1-minute load immediately BEFORE the measured run
+    pre_loads.append(round(os.getloadavg()[0], 1))
+    counts.append(run().count())
+
+best, reps = min_of(rep, n_reps)
+best_i = reps.index(best)
 print(json.dumps({
-    "master": master, "cores": cores, "seconds": round(best, 3),
-    "triples": count, "turns": turns,
-    "triples_per_sec": round(count / best, 1),
-    "turns_per_sec": round(turns / best, 1),
-    "pre_load_best_rep": best_pre_load,
+    "master": master, "cores": cores, "seconds": round(best.seconds, 3),
+    "triples": counts[best_i], "turns": turns,
+    "triples_per_sec": round(counts[best_i] / best.seconds, 1),
+    "turns_per_sec": round(turns / best.seconds, 1),
+    "pre_load_best_rep": pre_loads[best_i],
     "pre_loads": pre_loads,
-    # % of ONE core stolen by the hypervisor during each rep / the
-    # best rep — near 0 in clean epochs, hundreds when a co-tenant VM
-    # holds the physical cores (walls then measure the host, not the job)
-    "steal_pct_best_rep": best_steal,
-    "steal_pcts": steals,
+    "steal_pct_best_rep": round(best.steal_pct, 1),
+    "steal_pcts": [round(r.steal_pct, 1) for r in reps],
 }))
 spark.stop()
 shutil.rmtree(input_dir, ignore_errors=True)
@@ -174,7 +158,7 @@ def run_config(
         ],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=ROOT,
         timeout=2400,
     )
     for line in out.stdout.strip().splitlines():
@@ -283,9 +267,7 @@ def main() -> None:
         results[mode] = measure_mode(mode, args)
         print(json.dumps(results[mode]))
 
-    with open("/root/repo/BENCH.md", "w") as handle:
-        handle.write(render_bench_md(args, results, probe))
-    print("wrote BENCH.md", file=sys.stderr)
+    print(render_bench_md(args, results, probe))
 
 
 def render_bench_md(args, results: dict, probe: dict) -> str:

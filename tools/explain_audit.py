@@ -9,10 +9,11 @@ Prints one PASS/FAIL line per assertion plus the offending plan on FAIL.
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def plan_of(df) -> str:

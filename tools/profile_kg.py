@@ -1,8 +1,8 @@
 """Stage-by-stage wall-clock profile of the kg_triples path.
 
 Each stage is forced independently (fresh plan, no cache) so the time
-attribution matches what Catalyst actually schedules. min-of-N because
-the host is shared (MEMORY: shared-host-noise).
+attribution matches what Catalyst actually schedules. min-of-2 because
+the host is shared.
 """
 
 from __future__ import annotations
@@ -10,7 +10,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -22,15 +21,11 @@ from sherlock_spark.operators.ner import annotate_mentions, with_tokens
 from sherlock_spark.operators.rc import extract_triples
 from sherlock_spark.queries import _transcripts
 
+from measure import min_of
 
-def timed(fn, n=2):
-    best = None
-    for _ in range(n):
-        t0 = time.time()
-        fn()
-        dt = time.time() - t0
-        best = dt if best is None else min(best, dt)
-    return round(best, 2)
+
+def best_of_2(fn) -> float:
+    return round(min_of(fn, 2)[0].seconds, 2)
 
 
 def main() -> None:
@@ -40,15 +35,15 @@ def main() -> None:
 
     out = {}
     t = lambda: _transcripts(spark, sf_dir)
-    out["scan_repart"] = timed(lambda: t().count())
-    out["with_tokens"] = timed(
+    out["scan_repart"] = best_of_2(lambda: t().count())
+    out["with_tokens"] = best_of_2(
         lambda: with_tokens(t()).select(F.sum(F.size("tokens"))).collect()
     )
     ann = lambda: annotate_mentions(spark, t(), DEFAULT_NER_LEXICON)
-    out["annotate_ments"] = timed(
+    out["annotate_ments"] = best_of_2(
         lambda: ann().select(F.sum(F.size("ments"))).collect()
     )
-    out["triples_full"] = timed(
+    out["triples_full"] = best_of_2(
         lambda: extract_triples(
             spark,
             ann(),
