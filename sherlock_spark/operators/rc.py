@@ -31,7 +31,7 @@ from typing import Iterator, Optional, Tuple
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -116,6 +116,16 @@ def _pair_index_sql(max_mentions: int) -> str:
     return f"array({','.join(tables)})"
 
 
+def mention_counts(max_mentions: int) -> tuple[Column, Column]:
+    """``(n, capped)``: a turn's mention count and that count capped at
+    ``max_mentions``, with a null ``ments`` counted as empty.
+    ``size(NULL)`` is NULL under ANSI and ``least`` skips nulls, so the
+    cap alone would hand a null list the ``max_mentions`` pair slot
+    (240 phantom pairs at 16)."""
+    n = F.coalesce(F.size("ments"), F.lit(0))
+    return n, F.least(n, F.lit(max_mentions))
+
+
 def enumerate_pairs(annotated: DataFrame, max_mentions: int = 16) -> DataFrame:
     """Ordered mention pairs within each turn (one turn = one sentence,
     mirroring the sentence-restricted search space, binary_rc.py:307-313).
@@ -127,8 +137,7 @@ def enumerate_pairs(annotated: DataFrame, max_mentions: int = 16) -> DataFrame:
     ``max_mentions`` (array order = position = mention identity) and
     are flagged in ``ments_overflow`` for the metrics sink.
     """
-    n = F.size("ments")
-    capped = F.least(n, F.lit(max_mentions))
+    n, capped = mention_counts(max_mentions)
     pair_array = F.element_at(pair_index_array(max_mentions), capped + 1)
     return (
         annotated.withColumn("ments_overflow", n > F.lit(max_mentions))
@@ -547,8 +556,7 @@ def extract_triples(
             if entity_handling == "mark_entity_append_ner":
                 mask_map = mask_pieces_map(ner_labels, additional_tokens)
 
-        n_ments = F.size("ments")
-        capped = F.least(n_ments, F.lit(max_mentions))
+        n_ments, capped = mention_counts(max_mentions)
         capped_ments = F.slice(F.col("ments"), F.lit(1), capped)
         ment_texts = F.transform(
             capped_ments,
@@ -598,7 +606,7 @@ def extract_triples(
             # stage registry).
             turns = turns.localCheckpoint(eager=True)
 
-        m = F.size("ments")  # already capped
+        _, m = mention_counts(max_mentions)  # ments already capped
         # O(1) lookup into the constant-folded pair-index literal (see
         # pair_index_array): the old per-row transform/filter/flatten
         # construction was CodegenFallback — interpreted on every row

@@ -110,11 +110,10 @@ class CheckpointManager:
         stage: str,
         build: Callable[[], DataFrame],
         dedup_keys: Optional[list[str]] = None,
-        repartition_by: Optional[str] = None,
     ) -> DataFrame:
-        """Run ``build`` unless the stage already completed; materialize
-        it and record its lineage. Killed mid-write -> no lineage record
-        -> the rerun builds it again.
+        """Run ``build`` unless the stage already completed; write it in
+        the partitioning it arrives with and record its lineage. Killed
+        mid-write -> no lineage record -> the rerun builds it again.
         """
         if self.is_complete(stage):
             return self.read_stage(stage)
@@ -123,8 +122,6 @@ class CheckpointManager:
         df = build()
         if dedup_keys:
             df = df.dropDuplicates(dedup_keys)
-        if repartition_by:
-            df = df.repartition(F.col(repartition_by))
 
         if self.catalog is not None:
             partition_rows = self._write_iceberg(stage, df, dedup_keys)

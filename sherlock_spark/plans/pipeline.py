@@ -1,22 +1,26 @@
 """The extract -> link -> canonicalize -> materialize DAG.
 
 Spark shape of the reference ``Pipeline`` (``sherlock/pipeline.py:14-60``:
-a hand-ordered processor list with provenance stamping), rebuilt as
-checkpointed DataFrame stages (SURVEY.md §3.2). Each stage materializes
-to a table with per-partition lineage; rerunning after a failure skips
-completed stages (idempotent resume).
+a hand-ordered processor list with provenance stamping), rebuilt as a
+graph of materialized DataFrame stages (SURVEY.md §3.2). ``kg_dag`` is
+the one wiring of that graph; every stage goes through a
+``materialize(name, build, dedup_keys)`` seam, so the same graph runs
+checkpointed (``run_kg_pipeline``: ``CheckpointManager.run_stage``,
+per-file lineage, idempotent resume) and session-staged (the query
+registry: ``udfcache.stage``).
 
 Skew handling: input is repartitioned by ``hash(conv_id, salt)`` with
 ``salt = turn_idx // chunk_turns`` (``salt_by_conv``): oversized
 conversations split into bounded contiguous chunks while normal ones
 stay whole. Turn-level work is embarrassingly parallel, so splitting a
 conversation is safe — only ordering-sensitive consumers re-sort by
-(conv_id, turn_idx).
+(conv_id, turn_idx). Stage tables keep that layout; no stage re-clusters
+by conversation.
 """
 
 from __future__ import annotations
 
-from typing import Optional
+from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -27,6 +31,7 @@ from sherlock_spark.model_stub import (
 )
 from sherlock_spark.operators.canonicalize import canonicalize, materialize_graph
 from sherlock_spark.operators.linking import linked_mentions, make_alias_df
+from sherlock_spark.operators.metrics import pair_overflow_stats
 from sherlock_spark.operators.ner import annotate_mentions
 from sherlock_spark.operators.rc import extract_triples
 from sherlock_spark.plans.checkpoint import CheckpointManager
@@ -66,6 +71,89 @@ def salt_by_conv(
     )
 
 
+Materialize = Callable[[str, Callable[[], DataFrame], Optional[list[str]]], DataFrame]
+
+
+def kg_dag(
+    spark: SparkSession,
+    transcripts: DataFrame,
+    materialize: Materialize,
+    ner_lexicon: dict[str, str],
+    rc_labels: list[str],
+    rc_rule_map: Optional[dict[tuple[str, str], str]],
+    aliases: Optional[list[tuple[str, str, str]]],
+    entity_handling: str,
+    max_length: Optional[int],
+    max_mentions: int,
+    chunk_turns: int,
+    dedup_model_inputs: bool,
+) -> dict[str, DataFrame]:
+    """The KG stage graph over unsalted ``transcripts``: annotated ->
+    triples -> links -> canonical_map -> nodes/edges. Each stage is
+    ``materialize(name, build, dedup_keys)``; ``build`` runs only when
+    the seam has no stored table for ``name``, so a completed stage
+    never re-runs its model UDFs or the CC loop. ``aliases=None`` links
+    against ``default_aliases(ner_lexicon)``.
+    """
+
+    def build_annotated() -> DataFrame:
+        # The NER model stage, the dominant cost of the whole DAG at
+        # scale, is materialized ONCE and consumed by every downstream
+        # builder (and by the pipeline's pair-overflow metrics), so a
+        # cold run pays the forward over the corpus once. Pruned to the
+        # columns downstream stages read (conv_id/turn_idx identity,
+        # words for surface slicing, ments).
+        salted = salt_by_conv(transcripts, chunk_turns)
+        return annotate_mentions(spark, salted, ner_lexicon).select(
+            "conv_id", "turn_idx", "words", "ments"
+        )
+
+    annotated = materialize(
+        "annotated", build_annotated, ["conv_id", "turn_idx"]
+    )
+    triples = materialize(
+        "triples",
+        lambda: extract_triples(
+            spark,
+            annotated,
+            labels=rc_labels,
+            rule_map=rc_rule_map,
+            entity_handling=entity_handling,
+            max_length=max_length,
+            max_mentions=max_mentions,
+            dedup_model_inputs=dedup_model_inputs,
+        ),
+        ["conv_id", "turn_idx", "head_idx", "tail_idx"],
+    )
+
+    def build_links() -> DataFrame:
+        rows = default_aliases(ner_lexicon) if aliases is None else aliases
+        return linked_mentions(annotated, make_alias_df(spark, rows))
+
+    links = materialize(
+        "links", build_links, ["conv_id", "turn_idx", "ment_idx"]
+    )
+    # the tiny canonical map is broadcast twice (subj + obj joins)
+    canonical_map = materialize(
+        "canonical_map",
+        lambda: canonicalize(links),
+        ["ment_norm", "ment_label"],
+    )
+
+    # one plan serves both graph tables; building it runs no job
+    graph_nodes, graph_edges = materialize_graph(triples, canonical_map)
+    nodes = materialize("nodes", lambda: graph_nodes, ["canonical_id", "label"])
+    edges = materialize("edges", lambda: graph_edges, ["subj_id", "pred", "obj_id"])
+    return {
+        "annotated": annotated,
+        "triples": triples,
+        "links": links,
+        "canonical_map": canonical_map,
+        "nodes": nodes,
+        "edges": edges,
+    }
+
+
 def run_kg_pipeline(
     spark: SparkSession,
     transcripts: DataFrame,
@@ -79,108 +167,35 @@ def run_kg_pipeline(
     max_mentions: int = 16,
     chunk_turns: int = 256,
 ) -> dict[str, DataFrame]:
-    """Run (or resume) the full KG-construction DAG. Returns the stage
-    DataFrames: triples, links, canonical_map, nodes, edges.
+    """Run (or resume) the full KG-construction DAG, every stage
+    checkpointed under ``out_dir``. Returns the stage DataFrames
+    (annotated, triples, links, canonical_map, nodes, edges,
+    pair_overflow_metrics) and the stages' lineage records.
     """
     manager = CheckpointManager(spark, out_dir)
-    lexicon = DEFAULT_NER_LEXICON if ner_lexicon is None else ner_lexicon
-    labels = DEFAULT_RC_LABELS if rc_labels is None else rc_labels
-
-    def build_annotated() -> DataFrame:
-        # The NER model stage — the dominant cost of the whole DAG at
-        # scale — materialized ONCE and consumed by every downstream
-        # builder. Round 5 rebuilt ``annotate_mentions`` inside the
-        # triples, links, AND pair-overflow builders, so a cold
-        # pipeline run paid the model forward over the full corpus
-        # three times; checkpointing the annotated table makes it
-        # exactly once per cold run (and zero on resume). Pruned to the
-        # columns downstream stages read (conv_id/turn_idx identity,
-        # words for surface slicing, ments) — text/raw columns stay out
-        # of the stage table.
-        salted = salt_by_conv(transcripts, chunk_turns)
-        return annotate_mentions(spark, salted, lexicon).select(
-            "conv_id", "turn_idx", "words", "ments"
-        )
-
-    annotated = manager.run_stage(
-        "annotated",
-        build_annotated,
-        dedup_keys=["conv_id", "turn_idx"],
-        repartition_by="conv_id",
+    stages = kg_dag(
+        spark,
+        transcripts,
+        manager.run_stage,
+        ner_lexicon=DEFAULT_NER_LEXICON if ner_lexicon is None else ner_lexicon,
+        rc_labels=DEFAULT_RC_LABELS if rc_labels is None else rc_labels,
+        rc_rule_map=rc_rule_map,
+        aliases=aliases,
+        entity_handling=entity_handling,
+        max_length=max_length,
+        max_mentions=max_mentions,
+        chunk_turns=chunk_turns,
+        dedup_model_inputs=False,
     )
-
-    def build_triples() -> DataFrame:
-        return extract_triples(
-            spark,
-            annotated,
-            labels=labels,
-            rule_map=rc_rule_map,
-            entity_handling=entity_handling,
-            max_length=max_length,
-            max_mentions=max_mentions,
-        )
-
-    triples = manager.run_stage(
-        "triples",
-        build_triples,
-        dedup_keys=["conv_id", "turn_idx", "head_idx", "tail_idx"],
-        repartition_by="conv_id",
+    # counted overflow, not silent truncation (SURVEY §4): the
+    # max_mentions cap in enumerate_pairs is accounted for in a
+    # metrics-table row the lineage output carries
+    stages["pair_overflow_metrics"] = manager.run_stage(
+        "pair_overflow_metrics",
+        lambda: pair_overflow_stats(stages["annotated"], max_mentions),
     )
-
-    def build_pair_overflow() -> DataFrame:
-        # counted overflow, not silent truncation (SURVEY §4): the
-        # max_mentions cap in enumerate_pairs is accounted for in a
-        # metrics-table row the lineage output carries
-        from sherlock_spark.operators.metrics import pair_overflow_stats
-
-        return pair_overflow_stats(annotated, max_mentions)
-
-    pair_overflow = manager.run_stage(
-        "pair_overflow_metrics", build_pair_overflow
-    )
-
-    alias_rows = aliases if aliases is not None else default_aliases(lexicon)
-    alias_df = make_alias_df(spark, alias_rows)
-
-    def build_links() -> DataFrame:
-        return linked_mentions(annotated, alias_df)
-
-    links = manager.run_stage(
-        "links",
-        build_links,
-        dedup_keys=["conv_id", "turn_idx", "ment_idx"],
-        repartition_by="conv_id",
-    )
-
-    canonical_map = manager.run_stage(
-        "canonical_map",
-        lambda: canonicalize(links),
-        dedup_keys=["ment_norm", "ment_label"],
-    )
-
-    def build_nodes() -> DataFrame:
-        nodes, _ = materialize_graph(triples, canonical_map)
-        return nodes
-
-    def build_edges() -> DataFrame:
-        _, edges = materialize_graph(triples, canonical_map)
-        return edges
-
-    nodes = manager.run_stage("nodes", build_nodes, dedup_keys=["canonical_id", "label"])
-    edges = manager.run_stage(
-        "edges", build_edges, dedup_keys=["subj_id", "pred", "obj_id"]
-    )
-
-    return {
-        "annotated": annotated,
-        "triples": triples,
-        "links": links,
-        "canonical_map": canonical_map,
-        "nodes": nodes,
-        "edges": edges,
-        "pair_overflow_metrics": pair_overflow,
-        "lineage": manager.all_lineage(),
-    }
+    stages["lineage"] = manager.all_lineage()
+    return stages
 
 
 def default_aliases(lexicon: dict[str, str]) -> list[tuple[str, str, str]]:

@@ -51,7 +51,7 @@ from sherlock_spark.operators.canonicalize import canonicalize, materialize_grap
 from sherlock_spark.operators.linking import linked_mentions, make_alias_df
 from sherlock_spark.operators.ner import annotate_mentions, with_tokens
 from sherlock_spark.operators.rc import enumerate_pairs, extract_triples
-from sherlock_spark.plans.pipeline import salt_by_conv
+from sherlock_spark.plans.pipeline import kg_dag, salt_by_conv
 from sherlock_spark.sources.transcripts import (
     transcripts_from_documents,
     transcripts_from_documents_sql,
@@ -250,13 +250,16 @@ def q_kg_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     obj_text) keys and predictions broadcast-join back — on this
     transcript corpus the distinct-key table is ~100 rows vs 9.3M
     pairs, so the per-pair Python stage (Arrow transfer + forward)
-    collapses to a partial-aggregated distinct + broadcast probe.
-    Results are pinned identical to the per-pair path by the shared
-    oracle (``kg_triples_dedup_inputs`` has gated the same SQL at every
-    sf since round 4; interleaved sf1 A/B: ~3.5-4.5 s vs ~5-6.7 s
-    warm). The knob stays off by default in ``extract_triples`` —
-    on a high-cardinality corpus the distinct buys nothing — but agent
-    transcripts are exactly the heavy-repetition case it exists for."""
+    collapses to a partial-aggregated distinct + broadcast probe
+    (interleaved sf1 A/B: ~3.5-4.5 s vs ~5-6.7 s warm). The per-pair
+    path gated this oracle until round 6; since then both registry
+    names, ``kg_triples`` and ``kg_triples_dedup_inputs``, run this
+    function, and the per-pair path's equality is pinned by
+    ``test_dedup_model_inputs_identical_results``. The knob stays off by
+    default in ``extract_triples`` — on a high-cardinality corpus the
+    distinct buys nothing — but agent transcripts are exactly the
+    heavy-repetition case it exists for. Unstaged: every construction
+    times the extraction."""
     triples = extract_triples(
         spark,
         _annotated(spark, sf_dir),
@@ -307,36 +310,6 @@ SQL_KG_TRIPLES = f"""
 """
 
 
-def q_kg_triples_dedup_inputs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """kg_triples with the inference-cache knob on: the model forward
-    runs over DISTINCT (subj_type, obj_type, subj_text, obj_text) keys
-    only and predictions join back null-safely (``rc.py
-    extract_triples(dedup_model_inputs=True)``). Must hash-match the
-    per-pair path's oracle exactly — the knob changes forward cost, not
-    results."""
-    triples = extract_triples(
-        spark,
-        _annotated(spark, sf_dir),
-        labels=DEFAULT_RC_LABELS,
-        rule_map=None,
-        entity_handling="mark_entity",
-        max_length=None,
-        max_mentions=MAX_MENTIONS,
-        dedup_model_inputs=True,
-    )
-    return triples.select(
-        "conv_id",
-        F.col("turn_idx").cast("long"),
-        F.col("head_idx").cast("long"),
-        F.col("tail_idx").cast("long"),
-        "subj_text",
-        "subj_type",
-        "pred",
-        "obj_text",
-        "obj_type",
-    )
-
-
 def q_kg_links(spark: SparkSession, sf_dir: str) -> DataFrame:
     alias_df = make_alias_df(spark, CANON_ALIASES)
     links = linked_mentions(_annotated(spark, sf_dir), alias_df)
@@ -361,67 +334,34 @@ SQL_KG_LINKS = f"""
 """
 
 
-def _kg_stages(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """The three expensive KG stages (NER annotation, link->CC
-    canonical map, triple extraction), each materialized ONCE per
-    (session, sf_dir) through ``udfcache.stage``: every later
-    construction (and the nodes-vs-edges branches) reads stage output
-    instead of re-running the model UDFs and the CC loop. A second
-    wiring of ``run_kg_pipeline``'s DAG: it dedups model inputs and
-    sets no ``max_length``.
+def _kg_stages(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
+    """The KG stage graph (``plans.pipeline.kg_dag``) over this scale's
+    transcripts, each stage materialized ONCE per (session, sf_dir)
+    through ``udfcache.stage``: every later construction (and the
+    nodes-vs-edges branches) reads stage output instead of re-running
+    the model UDFs, the CC loop and the graph aggregations. The
+    registry's stages keep every row (no dedup keys), forward distinct
+    model inputs only (~100 keys) and set no ``max_length``.
     """
-    # NER output feeds both linking and extraction — pruned to the
-    # columns those stages read (drop text/tokens/bio)
-    annotated = stage(
+    return kg_dag(
         spark,
-        ("kg_annotated", sf_dir),
-        lambda: _annotated(spark, sf_dir).select(
-            "conv_id", "turn_idx", "words", "ments"
-        ),
+        transcripts_from_documents(_load(spark, sf_dir, "documents"), N_CONVS),
+        lambda name, build, _keys: stage(spark, ("kg", name, sf_dir), build),
+        ner_lexicon=DEFAULT_NER_LEXICON,
+        rc_labels=DEFAULT_RC_LABELS,
+        rc_rule_map=None,
+        aliases=CANON_ALIASES,
+        entity_handling="mark_entity",
+        max_length=None,
+        max_mentions=MAX_MENTIONS,
+        chunk_turns=256,
+        dedup_model_inputs=True,
     )
-    # the tiny canonical map is broadcast twice (subj + obj joins)
-    canonical_map = stage(
-        spark,
-        ("kg_canonical_map", sf_dir),
-        lambda: canonicalize(
-            linked_mentions(annotated, make_alias_df(spark, CANON_ALIASES))
-        ),
-    )
-    # triple extraction is the expensive stage — materialized once so
-    # the node/edge aggregations never re-run the model UDF; the
-    # distinct-key inference cache cuts its one-time build the same way
-    # it does q_kg_triples (identical output, oracle-pinned)
-    triples = stage(
-        spark,
-        ("kg_triples_stage", sf_dir),
-        lambda: extract_triples(
-            spark,
-            annotated,
-            labels=DEFAULT_RC_LABELS,
-            rule_map=None,
-            entity_handling="mark_entity",
-            max_length=None,
-            max_mentions=MAX_MENTIONS,
-            dedup_model_inputs=True,
-        ),
-    )
-    return annotated, canonical_map, triples
-
-
-def _graph_tables(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame]:
-    """Shared (nodes, edges) materialization over the checkpointed
-    stages of ``_kg_stages``."""
-    _annot, canonical_map, triples = _kg_stages(spark, sf_dir)
-    return materialize_graph(triples, canonical_map)
 
 
 def q_kg_canonical_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deduplicated canonical EDGE table (north rule: node/edge tables)."""
-    _nodes, edges = _graph_tables(spark, sf_dir)
+    edges = _kg_stages(spark, sf_dir)["edges"]
     return edges.select(
         "subj_id", "pred", "obj_id", F.col("n_evidence").cast("long")
     )
@@ -434,7 +374,7 @@ def q_kg_canonical_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
     under it; surface_forms is pipe-joined so the driver's value hash
     compares a scalar string (array cell reprs differ between Arrow and
     DuckDB result frames)."""
-    nodes, _edges = _graph_tables(spark, sf_dir)
+    nodes = _kg_stages(spark, sf_dir)["nodes"]
     return nodes.select(
         "canonical_id",
         "label",
@@ -2072,7 +2012,7 @@ def q_kg_degree(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph stages (no model re-run); one unpivot + hash aggregate."""
     from sherlock_spark.functions.graph import degree_stats
 
-    _nodes, edges = _graph_tables(spark, sf_dir)
+    edges = _kg_stages(spark, sf_dir)["edges"]
     return degree_stats(
         edges.select("subj_id", "pred", "obj_id", F.col("n_evidence").cast("long"))
     )
@@ -2156,7 +2096,7 @@ def q_kg_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle unrolls the identical recurrence as SQL CTEs."""
     from sherlock_spark.functions.graph import pagerank
 
-    _nodes, edges = _graph_tables(spark, sf_dir)
+    edges = _kg_stages(spark, sf_dir)["edges"]
     ranks = pagerank(
         edges.select("subj_id", "obj_id"),
         iterations=_PR_ITERATIONS,
@@ -2178,7 +2118,7 @@ def q_kg_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     closed form unrolled as CTE steps."""
     from sherlock_spark.functions.graph import bfs_depths
 
-    _nodes, edges = _graph_tables(spark, sf_dir)
+    edges = _kg_stages(spark, sf_dir)["edges"]
     return bfs_depths(
         edges.select("subj_id", "obj_id"), max_hops=_BFS_MAX_HOPS
     )
@@ -2224,7 +2164,7 @@ def q_kg_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     enumeration order, never the per-node counts."""
     from sherlock_spark.functions.graph import triangle_counts
 
-    _nodes, edges = _graph_tables(spark, sf_dir)
+    edges = _kg_stages(spark, sf_dir)["edges"]
     return triangle_counts(edges.select("subj_id", "obj_id"))
 
 
@@ -2363,7 +2303,7 @@ def q_kg_conflicts(spark: SparkSession, sf_dir: str) -> DataFrame:
     staged edge table (no model re-run; one hash aggregation)."""
     from sherlock_spark.functions.graph import conflicting_objects
 
-    _nodes, edges = _graph_tables(spark, sf_dir)
+    edges = _kg_stages(spark, sf_dir)["edges"]
     return conflicting_objects(
         edges.select("subj_id", "pred", "obj_id",
                      F.col("n_evidence").cast("long"))
@@ -2406,7 +2346,8 @@ def q_kg_edge_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     stages; ONE hash aggregation on the resolved ids."""
     from sherlock_spark.operators.canonicalize import resolve_canonical_ids
 
-    _annot, canonical_map, triples = _kg_stages(spark, sf_dir)
+    kg = _kg_stages(spark, sf_dir)
+    canonical_map, triples = kg["canonical_map"], kg["triples"]
     resolved = resolve_canonical_ids(triples, canonical_map)
     return resolved.groupBy("subj_id", "pred", "obj_id").agg(
         F.count("*").cast("long").alias("n_evidence"),
@@ -2890,7 +2831,7 @@ def q_kg_pred_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
     ontology review reads (and the data the functional-predicate
     conflict audit assumes). Three stacked hash aggregations over the
     canonical edges."""
-    _nodes, edges = _graph_tables(spark, sf_dir)
+    edges = _kg_stages(spark, sf_dir)["edges"]
     per_subj = edges.groupBy("pred", "subj_id").agg(
         F.count_distinct("obj_id").alias("n_obj")
     )
@@ -3009,7 +2950,7 @@ def q_kg_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     centrality table. One extra tiny aggregation over kg_degree."""
     from sherlock_spark.functions.graph import degree_stats
 
-    _nodes, edges = _graph_tables(spark, sf_dir)
+    edges = _kg_stages(spark, sf_dir)["edges"]
     deg = degree_stats(
         edges.select("subj_id", "pred", "obj_id", F.col("n_evidence").cast("long"))
     )
@@ -3165,7 +3106,7 @@ def q_kg_component_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
         connected_components,
     )
 
-    _nodes, edges = _graph_tables(spark, sf_dir)
+    edges = _kg_stages(spark, sf_dir)["edges"]
     cc = connected_components(
         edges.select(
             F.col("subj_id").alias("src"), F.col("obj_id").alias("dst")
@@ -3896,7 +3837,8 @@ def q_kg_cooccurrence_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     entity-set size, same blowup bound as mention pairs), and PMI =
     ln(c_ab * N / (c_a * c_b)) rounds to 4 before the compare. Pairs
     seen in fewer than 2 conversations are dropped (noise floor)."""
-    annotated, canonical_map, _trip = _kg_stages(spark, sf_dir)
+    kg = _kg_stages(spark, sf_dir)
+    annotated, canonical_map = kg["annotated"], kg["canonical_map"]
     ments = annotated.select(
         "conv_id", F.explode("ments").alias("m"), "words"
     )
@@ -4229,7 +4171,8 @@ def q_kg_conv_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     input unit (which conversations produce knowledge, which are
     barren). Two hash aggregations over checkpointed stages + one join
     on conv_id (left: barren conversations keep a 0 triple count)."""
-    annotated, _map, triples = _kg_stages(spark, sf_dir)
+    kg = _kg_stages(spark, sf_dir)
+    annotated, triples = kg["annotated"], kg["triples"]
     turn_stats = annotated.groupBy("conv_id").agg(
         F.count("*").cast("long").alias("n_turns"),
         F.sum(F.size("ments")).cast("long").alias("n_mentions"),
@@ -4286,7 +4229,7 @@ def q_kg_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation over the distinct undirected pairs."""
     from sherlock_spark.functions.graph import triangle_counts
 
-    _nodes, edges = _graph_tables(spark, sf_dir)
+    edges = _kg_stages(spark, sf_dir)["edges"]
     e = edges.select("subj_id", "pred", "obj_id", "n_evidence")
     und = (
         e.filter(F.col("subj_id") != F.col("obj_id"))
@@ -4405,7 +4348,7 @@ def q_kg_reciprocal_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     surface patterns); a standard KG-quality sweep. One self-join of
     the (deduplicated, canonical) edge table on the swapped key;
     a < b keeps one row per unordered pair."""
-    _nodes, edges = _graph_tables(spark, sf_dir)
+    edges = _kg_stages(spark, sf_dir)["edges"]
     e = edges.select("subj_id", "pred", "obj_id", "n_evidence")
     fwd = e.alias("f")
     rev = e.alias("r")
@@ -4450,7 +4393,8 @@ def q_kg_type_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     stages."""
     from sherlock_spark.operators.canonicalize import resolve_canonical_ids
 
-    _annot, canonical_map, triples = _kg_stages(spark, sf_dir)
+    kg = _kg_stages(spark, sf_dir)
+    canonical_map, triples = kg["canonical_map"], kg["triples"]
     resolved = resolve_canonical_ids(triples, canonical_map)
     return resolved.groupBy("subj_type", "pred", "obj_type").agg(
         F.count("*").cast("long").alias("n_evidence"),
@@ -5099,7 +5043,7 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "kg_mentions": q_kg_mentions,
     "kg_pairs": q_kg_pairs,
     "kg_triples": q_kg_triples,
-    "kg_triples_dedup_inputs": q_kg_triples_dedup_inputs,
+    "kg_triples_dedup_inputs": q_kg_triples,
     "kg_links": q_kg_links,
     "kg_canonical_edges": q_kg_canonical_edges,
     "kg_canonical_nodes": q_kg_canonical_nodes,

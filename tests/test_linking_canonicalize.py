@@ -90,9 +90,11 @@ def test_canonicalize_shared_alias(spark, annotated):
     assert mapping[("montcourt", "PERSON")] != mapping[("paris", "CITY")]
 
 
-def test_full_dag_and_resume(spark, tmp_path):
+def test_full_dag_and_resume(spark, tmp_path, dag_sentences):
     out_dir = str(tmp_path / "kg")
-    transcripts = synth_transcripts_from_fixtures(spark, n_convs=4, turns_per_conv=2)
+    transcripts = synth_transcripts_from_fixtures(
+        spark, n_convs=4, turns_per_conv=2, sentences=dag_sentences
+    )
     result = run_kg_pipeline(
         spark,
         transcripts,
@@ -160,7 +162,9 @@ def test_full_dag_and_resume(spark, tmp_path):
     assert result2["edges"].count() == n_edges
 
 
-def test_pipeline_annotates_once_per_cold_run(spark, tmp_path, monkeypatch):
+def test_pipeline_annotates_once_per_cold_run(
+    spark, tmp_path, monkeypatch, dag_sentences
+):
     """Round-6 fix for the round-5 plan defect: triples, links, and
     pair-overflow metrics all consume ONE materialized ``annotated``
     stage, so the NER model stage is built (and executed, via the
@@ -177,7 +181,7 @@ def test_pipeline_annotates_once_per_cold_run(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(pipeline_mod, "annotate_mentions", counting_annotate)
     transcripts = synth_transcripts_from_fixtures(
-        spark, n_convs=2, turns_per_conv=2
+        spark, n_convs=2, turns_per_conv=2, sentences=dag_sentences
     )
     out_dir = str(tmp_path / "kg")
     result = run_kg_pipeline(
@@ -204,3 +208,49 @@ def test_pipeline_annotates_once_per_cold_run(spark, tmp_path, monkeypatch):
         aliases=ALIASES,
     )
     assert len(calls) == 0
+
+
+def test_kg_dag_equal_through_either_materializer(
+    spark, tmp_path, monkeypatch, dag_sentences
+):
+    """Differential test of the materializer seam: the stage graph run
+    through ``CheckpointManager.run_stage`` (parquet, key dedup) and
+    through ``udfcache.stage`` (session ``localCheckpoint``), each with
+    the distinct-key model forward off and on, collects equal rows for
+    every stage."""
+    from sherlock_spark.plans.pipeline import kg_dag
+    from sherlock_spark.udfcache import stage
+
+    monkeypatch.delenv("SHERLOCK_STAGE_DIR", raising=False)
+    transcripts = synth_transcripts_from_fixtures(
+        spark, n_convs=4, turns_per_conv=3, sentences=dag_sentences
+    )
+    results = []
+    for dedup in (False, True):
+        seams = [
+            CheckpointManager(spark, str(tmp_path / f"ckpt-{dedup}")).run_stage,
+            lambda name, build, _keys, dedup=dedup: stage(
+                spark, ("seam-test", str(tmp_path), dedup, name), build
+            ),
+        ]
+        for seam in seams:
+            stages = kg_dag(
+                spark,
+                transcripts,
+                seam,
+                ner_lexicon=FIXTURE_NER_LEXICON,
+                rc_labels=FIXTURE_RC_LABELS,
+                rc_rule_map=FIXTURE_RC_RULES,
+                aliases=ALIASES,
+                entity_handling="mark_entity",
+                max_length=128,
+                max_mentions=16,
+                chunk_turns=256,
+                dedup_model_inputs=dedup,
+            )
+            results.append(
+                {name: sorted(map(str, df.collect())) for name, df in stages.items()}
+            )
+    assert results[0]["triples"] and results[0]["edges"]
+    for other in results[1:]:
+        assert other == results[0]

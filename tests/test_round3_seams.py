@@ -235,16 +235,35 @@ def test_allennlp_rc_probs_and_one_load(spark, tmp_path):
         assert max(r.probs, key=r.probs.get) == r.pred
 
 
-def test_dedup_model_inputs_identical_results(spark):
+def test_dedup_model_inputs_identical_results(spark, tmp_path, dag_sentences):
     """Inference-input dedup (distinct -> forward -> join back) returns
     EXACTLY the per-pair-forward results — the model is a pure function
-    of the four key fields."""
+    of the four key fields. A turn whose ``ments`` is null (a plugged-in
+    annotator may return one) yields no pair and no triple on either
+    path."""
     from sherlock_spark.operators.ner import annotate_mentions
-    from sherlock_spark.operators.rc import extract_triples
+    from sherlock_spark.operators.rc import enumerate_pairs, extract_triples
     from sherlock_spark.sources.transcripts import synth_transcripts_from_fixtures
 
-    t = synth_transcripts_from_fixtures(spark, n_convs=6, turns_per_conv=10)
-    ann = annotate_mentions(spark, t, FIXTURE_NER_LEXICON)
+    t = synth_transcripts_from_fixtures(
+        spark, n_convs=6, turns_per_conv=10, sentences=dag_sentences
+    )
+    ann = annotate_mentions(spark, t, FIXTURE_NER_LEXICON).select(
+        "conv_id", "turn_idx", "words", "ments"
+    )
+    null_turn = ann.limit(1).select(
+        F.lit("conv-null").alias("conv_id"),
+        "turn_idx",
+        "words",
+        F.lit(None).cast(ann.schema["ments"].dataType).alias("ments"),
+    )
+    # read back from parquet: over a literal null Catalyst folds the
+    # pair explode to zero rows and would hide a phantom-pair defect
+    path = str(tmp_path / "annotated")
+    ann.unionByName(null_turn).write.parquet(path)
+    ann = spark.read.parquet(path)
+    assert ann.filter("ments IS NULL").count() == 1
+    assert enumerate_pairs(ann, 16).filter("conv_id = 'conv-null'").count() == 0
     kwargs = dict(
         entity_handling="mark_entity", max_length=None, max_mentions=16,
         ignore_no_relation=False,
@@ -263,6 +282,7 @@ def test_dedup_model_inputs_identical_results(spark):
     a = sorted(map(tuple, base.select(*cols).collect()))
     b = sorted(map(tuple, deduped.select(*cols).collect()))
     assert a == b and len(a) > 0
+    assert not [row for row in a if row[0] == "conv-null"]
 
 
 def test_allennlp_two_archives_no_collision(spark, tmp_path):

@@ -148,14 +148,27 @@ def main() -> int:
         and "ExistingRDD" in plan,
         plan,
     )
+    # the graph tables are stages too: a repeat construction of the
+    # node table scans the staged nodes, never re-running the
+    # canonical-resolve joins of materialize_graph
+    from sherlock_spark.queries import q_kg_canonical_nodes
+
+    q_kg_canonical_nodes(spark, sf_dir).count()
+    plan = plan_of(q_kg_canonical_nodes(spark, sf_dir))
+    check(
+        "kg_canonical_nodes (repeat construction): reads staged nodes, "
+        "no Join",
+        "ExistingRDD" in plan and "Join" not in plan,
+        plan,
+    )
 
     # 6. inference-cache path: the dedup variant's plan must hash-
     #    partition on the four model keys (serving both the distinct
     #    and the model-stage spread) and keep the null-safe join —
     #    never a second round-robin exchange on top
-    from sherlock_spark.queries import q_kg_triples_dedup_inputs
+    from sherlock_spark.queries import QUERIES
 
-    plan = plan_of(q_kg_triples_dedup_inputs(spark, sf_dir))
+    plan = plan_of(QUERIES["kg_triples_dedup_inputs"](spark, sf_dir))
     check(
         "kg_triples_dedup_inputs: hash exchange on the model keys",
         re.search(
